@@ -31,6 +31,9 @@ object Steal {
   final case class StealReport(
       table: String, rows: Long, ok: Boolean, error: Option[String])
 
+  /** Directory-to-directory steal: `sourceDir`'s `<table>.parquet` files
+    * to `targetDir` through [[ParquetSink]] — [[runDsn]] over the two
+    * directories as `file://` DSNs. */
   def run(
       spark: SparkSession,
       sourceDir: String,
@@ -41,29 +44,20 @@ object Steal {
       dataOnly: Boolean = false,
       bestEffort: Boolean = false,
       consistentParents: Boolean = false): Seq[StealReport] = {
-
-    val catalog = Tables.list(sourceDir) // source of record
-    val planner = new SubsetPlanner(
-      Tables.load(spark, sourceDir, _), tables, consistentParents, catalog)
-    val byName = tables.map(t => t.name -> t).toMap
-
-    def dumpTable(name: String): StealReport = {
-      try {
-        val cfg = byName.getOrElse(name, TableConfig(name))
-        val subset: DataFrame =
-          if (byName.contains(name)) planner.plan(name)
-          else Tables.load(spark, sourceDir, name) // unconfigured: full copy
-        val (anonymised, rowsOf) = observed(Anonymiser(subset, cfg, secret))
-        ParquetSink.write(anonymised, targetDir, name, dataOnly)
-        StealReport(name, rowsOf(), ok = true, None)
-      } catch {
-        case e: Exception if bestEffort =>
-          StealReport(name, 0, ok = false, Some(e.getMessage))
-      }
-    }
-
     new java.io.File(targetDir).mkdirs()
-    runPool(catalog, concurrency)(dumpTable)
+    runDsn(spark, dirDsn(sourceDir), dirDsn(targetDir), tables, secret,
+      concurrency, dataOnly, bestEffort, consistentParents = consistentParents)
+  }
+
+  /** The parquet `file://` DSN of a directory. The DSN grammar cannot
+    * carry every path (a `)` ends the address), so a path that does not
+    * resolve back to itself is refused rather than read from elsewhere. */
+  private[graft] def dirDsn(dir: String): String = {
+    val dsn = s"file://path($dir)/?format=parquet"
+    require(graft.sources.Drivers.resolve(dsn) ==
+      graft.sources.Resolved.File(dir, "parquet"),
+      s"directory '$dir' cannot be expressed as a file:// DSN")
+    dsn
   }
 
   /** Attach a row-count observation so the report comes from the write's
@@ -137,11 +131,24 @@ object Steal {
       // limit, want the V1 PK-partitioned parallel cursors instead — a V2
       // JDBC scan is one remote query, the right shape only when pushdown
       // shrinks the answer at the source.
-      pushdownScan: Boolean = false): Seq[StealReport] = {
+      pushdownScan: Boolean = false,
+      // see SubsetPlanner: children subset against their parent's own
+      // materialized subset
+      consistentParents: Boolean = false): Seq[StealReport] = {
     import graft.sources.{Drivers, Resolved}
     import graft.sinks.{JdbcSink, JdbcSinkConfig, SqlTextSink}
 
     val catalog = Drivers.listTables(spark, fromDsn)
+    // Each source table is resolved at most once per call (≅ the
+    // reference's one catalog read per run, engine.go:52-79): the planner
+    // loads a parent again for every child that references it, and an
+    // unconfigured table would be loaded once more for its full copy —
+    // on a file source each load is a footer read, on JDBC a schema query
+    // plus the PK MIN/MAX probe. Nothing outlives the call: the next
+    // steal lists and reads its source afresh.
+    val resolved = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    val read: String => DataFrame = name =>
+      resolved.computeIfAbsent(name, Drivers.read(spark, fromDsn, _, readOpts))
     // catalog name derived from the DSN (ADVICE r13 #4): a second runDsn
     // in the same session against a different source registers its own
     // catalog instead of silently repointing "graft_src"; readOpts ride
@@ -151,8 +158,9 @@ object Steal {
       if (pushdownScan && Drivers.resolve(fromDsn).isInstanceOf[Resolved.Jdbc])
         Drivers.catalogLoader(
           spark, Drivers.catalogNameFor(fromDsn), fromDsn, readOpts)
-      else Drivers.read(spark, fromDsn, _, readOpts)
-    val planner = new SubsetPlanner(subsetLoad, tables, knownTables = catalog)
+      else read
+    val planner = new SubsetPlanner(
+      subsetLoad, tables, consistentParents, knownTables = catalog)
     val byName = tables.map(t => t.name -> t).toMap
     val target = Drivers.resolve(toDsn)
 
@@ -160,24 +168,28 @@ object Steal {
       val cfg = byName.getOrElse(name, TableConfig(name))
       val subset =
         if (byName.contains(name)) planner.plan(name)
-        else Drivers.read(spark, fromDsn, name, readOpts)
+        else read(name) // unconfigured: full copy
       val (anonymised, rowsOf) = observed(Anonymiser(subset, cfg, secret))
-      target match {
+      val rows = target match {
         case Resolved.File(path, "parquet") =>
           ParquetSink.write(anonymised, path, name, dataOnly)
+          rowsOf()
         case Resolved.File(path, format) =>
           anonymised.write.mode("overwrite").format(format)
             .option("header", "true").save(s"$path/$name.$format")
+          rowsOf()
         case Resolved.Console(_) =>
           // single writer: serialize table dumps like the reference's text
           // dumper (its Dump deliberately ignores concurrency,
-          // query/dumper.go:52-99)
+          // query/dumper.go:52-99). The sink counts its own rows: an
+          // Observation never completes under toLocalIterator.
           out.synchronized { SqlTextSink.write(anonymised, name, out, dataOnly) }
         case Resolved.Jdbc(url, props) =>
           JdbcSink.write(anonymised, JdbcSinkConfig(url, name, props,
             queryTimeout = writeTimeout, maxConns = writeMaxConns))
+          rowsOf()
       }
-      StealReport(name, rowsOf(), ok = true, None)
+      StealReport(name, rows, ok = true, None)
     } catch {
       case e: Exception if bestEffort =>
         StealReport(name, 0, ok = false, Some(e.getMessage))

@@ -1,6 +1,13 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 
@@ -35,7 +42,79 @@ object Tables {
     // spark.sql.extensions=graft.functions.GraftExtensions still resolve
     // the custom vec_* expressions (registration is idempotent and cheap)
     graft.functions.VectorFunctions.register(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+  }
+
+  /** `spark.read.parquet(path)` with the schema read on the driver.
+    * Without a schema, Spark infers one by reading a single footer (the
+    * first data file's) inside a one-task `parallelize(...).collect()`
+    * job: ~30 ms of scheduler floor per table load. This reads the same
+    * footer here and converts it with the same function and settings
+    * (Spark's row-metadata key first, else the parquet types under the
+    * session's binary-as-string / INT96 / NTZ / nanosAsLong confs), then
+    * hands the schema to the reader, so no job runs. Whenever Spark's
+    * inference would look at anything other than that one footer, the
+    * plain reader runs instead — see [[footerSchema]]. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema Spark would infer for a non-partitioned parquet `path`
+    * (a file, or a directory of data files), from the footer of the first
+    * data file in path order — Spark's own pick when no summary file
+    * exists. None, leaving inference to Spark, when:
+    *   - `spark.sql.parquet.mergeSchema` is on (every footer counts);
+    *   - `path` is a glob, or does not exist;
+    *   - the directory holds a sub-directory (Hive partitions: the
+    *     partition columns come from the directory names);
+    *   - a `_metadata`/`_common_metadata` summary file exists (Spark
+    *     prefers it to the data files);
+    *   - there is no data file, or its footer cannot be read (Spark then
+    *     raises its own error).
+    * Names Spark's file listing skips (`_x` without `=`, `.x`,
+    * `x._COPYING_`) are skipped here too. */
+  private[graft] def footerSchema(
+      spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")
+    def summary(name: String): Boolean =
+      name.startsWith("_metadata") || name.startsWith("_common_metadata")
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_)))
+      return None
+    try {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val fs = root.getFileSystem(hadoopConf)
+      val status = fs.getFileStatus(root)
+      val dataFile: Option[FileStatus] =
+        if (!status.isDirectory) Some(status).filterNot(s => hidden(s.getPath.getName))
+        else {
+          val children = fs.listStatus(root).toSeq
+          def name(c: FileStatus) = c.getPath.getName
+          if (children.exists(c => summary(name(c)) || c.isDirectory && !hidden(name(c)))) None
+          else children.filter(c => c.isFile && !hidden(name(c)))
+            .sortBy(_.getPath.toString).headOption
+        }
+      dataFile.map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        // the converter settings of Spark's inference job
+        // (ParquetFileFormat.mergeSchemasInParallel): session values for
+        // these five, defaults for the rest
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
+      }
+    } catch { case NonFatal(_) => None }
   }
 
   /** Conform a scanned DataFrame to a canonical schema by casting exactly
@@ -197,14 +276,5 @@ object Tables {
     val bad = raw.where(col("_corrupt_record").isNotNull)
       .select(col("_corrupt_record").as("raw_record"))
     (good, bad)
-  }
-
-  /** Discover table names present in a directory (catalog listing, S3). */
-  def list(dir: String): Seq[String] = {
-    val d = new java.io.File(dir)
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet"))
-      .map(_.getName.stripSuffix(".parquet"))
-      .sorted.toSeq
   }
 }

@@ -46,14 +46,16 @@ object ParquetSink {
   */
 object SqlTextSink {
 
+  /** Returns the rows written. */
   def write(df: DataFrame, table: String, out: Writer,
-      dataOnly: Boolean = false, batchRows: Int = 500): Unit = {
+      dataOnly: Boolean = false, batchRows: Int = 500): Long = {
     if (!dataOnly)
       out.write(s"CREATE TABLE $table (${df.schema.toDDL});\n")
     val cols = df.columns.map(quoteIdent).mkString(", ")
     val schema = df.schema
     val it = df.toLocalIterator()
     val batch = new scala.collection.mutable.ArrayBuffer[String](batchRows)
+    var rows = 0L
     def flush(): Unit = if (batch.nonEmpty) {
       out.write(s"INSERT INTO $table ($cols) VALUES\n  ")
       out.write(batch.mkString(",\n  "))
@@ -62,10 +64,12 @@ object SqlTextSink {
     }
     while (it.hasNext) {
       batch += rowLiteral(it.next(), schema)
+      rows += 1
       if (batch.size >= batchRows) flush()
     }
     flush()
     out.flush()
+    rows
   }
 
   def quoteIdent(name: String): String = "\"" + name.replace("\"", "\"\"") + "\""

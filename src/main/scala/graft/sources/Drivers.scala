@@ -194,6 +194,9 @@ object Drivers {
               .option("numPartitions", n.toString)
           }
         r.load()
+      case Resolved.File(path, "parquet") =>
+        // schema from one footer on the driver, not an inference job
+        graft.Tables.parquet(spark, s"$path/$table.parquet")
       case Resolved.File(path, format) =>
         spark.read.format(format).load(s"$path/$table.$format")
       case Resolved.Console(_) =>
